@@ -13,6 +13,7 @@ import json
 import os
 import sys
 import time
+import warnings
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -106,8 +107,11 @@ def main() -> None:
     for name, q in sorted(headline.items()):
         try:
             q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # warmup is best-effort
+        except Exception as exc:  # warm-up is best-effort, but never silent
+            warnings.warn(
+                f"bench warm-up of {name} failed: {type(exc).__name__}",
+                RuntimeWarning,
+            )
 
     # Drop warm-up (sf0.001) artifact builds from the build-seconds
     # report: the additive key below should hold only the builds paid at
@@ -146,7 +150,6 @@ def main() -> None:
         medians[name] = round(med, 4)
 
     calib_after = _calibration_sec()
-    from iris_pyspark_spark.sources import ARTIFACT_BUILD_SECONDS
 
     print(
         json.dumps(

@@ -337,7 +337,14 @@ def simhash_near_pairs(
     (width+1)x more probe-side rows (tiny: (id, band, key) triples) for
     ~2^6x smaller buckets: ~sum_j (w_j+1)*n^2/2^w_j ~= 0.010*n^2 vs
     0.070*n^2 — ~7x fewer candidate rows shuffled, hamming-checked and
-    deduplicated, at the same guaranteed recall."""
+    deduplicated, at the same guaranteed recall.
+
+    Requires max_hamming >= 2: below that the split is ONE 64-bit band,
+    whose mask and flip literals overflow LongType."""
+    if max_hamming < 2:
+        raise ValueError(
+            f"simhash_near_pairs needs max_hamming >= 2, got {max_hamming}"
+        )
     n_bands = max_hamming // 2 + 1
     # Partition the 64 bits into n_bands contiguous bands whose widths sum
     # to EXACTLY 64 (the first 64 % n_bands bands get one extra bit). A

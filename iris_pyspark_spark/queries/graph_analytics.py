@@ -830,8 +830,8 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is heavy-tailed (scale-free-ish) or homogeneous, which
     decides whether skew handling (salting, AQE skew join) matters for
     graph workloads on this data. Buckets by exact LENGTH(bin(d))
-    (the `a_log2_histogram` rule — no float log), edges from the
-    bounded orderkey self-join, degrees one combinable count.
+    (the `a_log2_histogram` rule — no float log), degrees read from the
+    shared `_pair_degrees` artifact.
     """
     # Degree table from the shared fingerprinted artifact (round 12):
     # this query needs ONLY degrees, so it scans |V| parquet rows

@@ -632,10 +632,10 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks."""
     import shutil
 
-    from ..session import configure
+    from ..session import ensure_configured
     from ..sources.python_datasource import SensorsStreamDataSource
 
-    configure(spark)
+    ensure_configured(spark)
     try:
         spark.dataSource.register(SensorsStreamDataSource)
     except Exception:

@@ -257,9 +257,9 @@ def st_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..sources import scratch_dir
-    from ..session import configure
+    from ..session import ensure_configured
 
-    configure(spark)
+    ensure_configured(spark)
     src = scratch_dir(sf_dir, "fb_src")
     from ..sources import artifact_is_current, mark_artifact, table_fingerprint
 
@@ -346,10 +346,10 @@ def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..session import configure
+    from ..session import ensure_configured
     from ..sources import scratch_dir
 
-    configure(spark)
+    ensure_configured(spark)
     staged = scratch_dir(sf_dir, "resume_staged")  # all files, pre-split
     src = scratch_dir(sf_dir, "resume_src")        # the monitored dir
     sink = scratch_dir(sf_dir, "resume_sink")
@@ -1197,7 +1197,7 @@ def st_foreachbatch_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from ..session import configure
+    from ..session import ensure_configured
     from ..sources import (
         artifact_is_current,
         mark_artifact,
@@ -1205,7 +1205,7 @@ def st_foreachbatch_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_fingerprint,
     )
 
-    configure(spark)
+    ensure_configured(spark)
     src = scratch_dir(sf_dir, "scd2_src")
     src_fp = table_fingerprint(sf_dir, "events", params="scd2-src-4wnd")
     if not artifact_is_current(src, src_fp):
@@ -1583,7 +1583,7 @@ def st_apply_state_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..session import configure
+    from ..session import ensure_configured
     from ..sources import (
         artifact_is_current,
         mark_artifact,
@@ -1591,7 +1591,7 @@ def st_apply_state_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_fingerprint,
     )
 
-    configure(spark)
+    ensure_configured(spark)
     src = scratch_dir(sf_dir, "aps_src")
     src_fp = table_fingerprint(sf_dir, "events", params="aps-src-4part")
     if not artifact_is_current(src, src_fp):
@@ -2273,7 +2273,7 @@ def st_apply_state_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from ..session import configure
+    from ..session import ensure_configured
     from ..sources import (
         artifact_is_current,
         mark_artifact,
@@ -2281,7 +2281,7 @@ def st_apply_state_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_fingerprint,
     )
 
-    configure(spark)
+    ensure_configured(spark)
     src = scratch_dir(sf_dir, "aps_day_src")
     src_fp = table_fingerprint(sf_dir, "events", params="aps-day-partials-4part")
     if not artifact_is_current(src, src_fp):
@@ -2829,7 +2829,7 @@ def _stage_aps_census_src(spark: SparkSession, sf_dir: str) -> str:
     round-robin across the 4 files, so cross-batch state merging stays
     exercised in the family. Money enters the partials as exact integer
     cents BEFORE summing — identical totals to summing per event."""
-    from ..session import configure
+    from ..session import ensure_configured
     from ..sources import (
         artifact_is_current,
         mark_artifact,
@@ -2837,7 +2837,7 @@ def _stage_aps_census_src(spark: SparkSession, sf_dir: str) -> str:
         table_fingerprint,
     )
 
-    configure(spark)
+    ensure_configured(spark)
     src = scratch_dir(sf_dir, "aps_census_src_r11")
     fp = table_fingerprint(sf_dir, "events", params="aps-census-partials-r12-4part")
     if not artifact_is_current(src, fp):

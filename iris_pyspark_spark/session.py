@@ -11,11 +11,17 @@ cluster (they tune *plan* behavior, not local-mode hacks):
   * shuffle.partitions defaults small for the MB-scale test data; at
     real scale AQE coalescing makes the static number mostly moot, and
     callers can override via IRIS_PYSPARK_SHUFFLE_PARTITIONS.
+
+The runtime confs are applied once per session (`configure`, marked by
+CONFIGURED_KEY); after that they belong to the caller, so an explicit
+`get_spark(shuffle_partitions=...)` or a later `spark.conf.set` survives
+every table load (`ensure_configured`).
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -45,12 +51,17 @@ RUNTIME_CONFS: dict[str, str] = {
     # explicitly by s_minmax_manifest_skipping's manifest pattern.
 }
 
+#: Session-conf marker `configure` sets: the session has had RUNTIME_CONFS
+#: applied once, and its confs are now the caller's to change.
+CONFIGURED_KEY = "spark.iris_pyspark.configured"
+
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent).
+    """Apply runtime confs to an existing session and mark it configured.
 
-    Used both by our own factory and on driver-provided sessions, since
-    reading `events.parquet` is impossible without `nanosAsLong`.
+    Used by our own factory; sessions created elsewhere get it through
+    `ensure_configured`, since reading `events.parquet` is impossible
+    without `nanosAsLong`.
 
     Failures to apply a conf are collected and reported in ONE warning
     (not raised): a session that rejects `nanosAsLong` will fail on
@@ -63,8 +74,6 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             failed.append(k)
     if failed:
-        import warnings
-
         warnings.warn(
             "could not apply session confs "
             f"{failed}; events.parquet reads need "
@@ -74,6 +83,17 @@ def configure(spark: SparkSession) -> SparkSession:
             RuntimeWarning,
             stacklevel=2,
         )
+    spark.conf.set(CONFIGURED_KEY, "true")
+    return spark
+
+
+def ensure_configured(spark: SparkSession) -> SparkSession:
+    """`configure` a session that never was (a vanilla session built
+    outside `get_spark`); leave a configured session's confs alone, so
+    the caller's own settings — e.g. the shuffle width — are not reset
+    to RUNTIME_CONFS."""
+    if spark.conf.get(CONFIGURED_KEY, None) != "true":
+        configure(spark)
     return spark
 
 
@@ -135,13 +155,16 @@ def _gc_scratch_once() -> None:
 
         deleted = gc_scratch()
         if deleted:
-            import warnings
-
             warnings.warn(
                 f"scratch GC evicted {len(deleted)} artifact dirs over the "
                 "2 GiB cap (rebuilt on next use)",
                 RuntimeWarning,
                 stacklevel=2,
             )
-    except Exception:
-        pass  # GC must never block session creation
+    except Exception as exc:  # GC must never block session creation
+        warnings.warn(
+            f"scratch GC failed ({type(exc).__name__}: {exc}); "
+            "artifacts were not evicted",
+            RuntimeWarning,
+            stacklevel=2,
+        )

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import configure
+from ..session import ensure_configured
 from ..sources import scratch_dir
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
@@ -64,7 +64,7 @@ _SINK_IDS = itertools.count()
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet, normalized to the same
     (event_id, ts timestamp_ntz, ...) shape the batch catalog serves."""
-    configure(spark)
+    ensure_configured(spark)
     # The file stream source monitors a DIRECTORY; the test data is a
     # single parquet file, so stage it into a scratch dir once. (A real
     # deployment's landing zone is already a directory of files.)

@@ -792,3 +792,16 @@ def test_apply_state_day_census_invariant_to_batch_split(spark, sf_dir):
     pd.testing.assert_frame_equal(
         base.reset_index(drop=True), single.reset_index(drop=True)
     )
+
+
+def test_simhash_rejects_max_hamming_below_two(spark):
+    """Below 2 the pigeonhole split is one 64-bit band, whose literals
+    overflow LongType: refuse it up front."""
+    import pytest
+
+    from iris_pyspark_spark.operators.dedup import simhash_near_pairs
+
+    df = spark.createDataFrame([(1, 0x12345)], "doc_id long, simhash long")
+    for k in (1, 0):
+        with pytest.raises(ValueError, match="max_hamming >= 2"):
+            simhash_near_pairs(df, "doc_id", "simhash", max_hamming=k)
